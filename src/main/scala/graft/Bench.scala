@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -9,32 +8,7 @@ object Bench {
     // regression (round-2 lesson: two unchanged queries "regressed" 10×
     // in a single-run bench)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("graft.stream.shufflePartitions", "8")
-      // Round-15 (verdict #1, the 32-core anti-scaling): with
-      // shuffle.partitions = cpus every SQL exchange sits under the
-      // bypassMergeThreshold default (200), so the bypass writer opened
-      // R files PER MAP TASK (32×32 = 1024 file ops per exchange) — a
-      // kernel-VFS CPU storm from 32 concurrent tiny tasks that made
-      // the 8-core suite beat the 32-core suite outright (measured
-      // -53% CPU / -29% wall on the worst family with the serialized
-      // writer; docs/r15/). 8 = the stream shuffle-partition count:
-      // batch exchanges (≥ cpus reducers) use the serialized sort
-      // writer — one spill file + index per map task, what Spark
-      // already uses for every >200-partition shuffle at production
-      // scale — while the 8-reducer micro-batch shuffles keep the
-      // bypass fast path (A/B: stream family 63.4 s at 0 vs 56.5 s
-      // at 8; docs/r15/stream_iso_32_t{0,8}.log).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(cpus)
     // warm the JVM/codegen paths so the first measured query doesn't pay
     // session-startup cost (classloading, codegen compiler init)
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -53,9 +27,7 @@ object Bench {
       require(unknown.isEmpty,
         s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
     }
-    // Broadcasts resident at session start (post-warm-up) are session
-    // infrastructure, never swept; everything above this baseline was
-    // created by a completed query and is fair game for the sweep.
+    // post-warm-up: the warm-up's broadcasts are session infrastructure
     val bcBaseline = graft.operators.Eager.broadcastSnapshot(spark)
     // Cumulative spill counters (round-8 verdict #1): the two channels
     // the storage log did NOT cover while the persist-heavy family kept
@@ -164,35 +136,7 @@ object Bench {
       s
     }
     val classBean = java.lang.management.ManagementFactory.getClassLoadingMXBean
-    // Deterministic storage sweep: clearCache drops table caches but is
-    // blind to localCheckpoint blocks (terminal results, any round
-    // frames an operator failed to release), which otherwise wait for
-    // a driver GC to let the ContextCleaner run — demonstrably too
-    // late 150 queries into a suite (round-6 driver medians for the
-    // checkpoint-heavy family inflated 3.5–4.8× vs isolated runs while
-    // System.gc() alone was in place). Between queries NOTHING is
-    // legitimately persisted, so unpersist every surviving RDD by
-    // handle — synchronous map removal, no GC required. Round 7's
-    // residual driver-only inflation moved the same mechanism to
-    // BROADCAST blocks (one per broadcast join, GC+ContextCleaner
-    // reclaimed), so the sweep destroys those by id too — every
-    // broadcast created since session baseline is from a completed
-    // run of this single-query-at-a-time loop, so none can be read
-    // again. ...and shuffle state (round 9): each completed wide stage
-    // leaves map-output files on local disk plus driver-side
-    // ShuffleStatus, reclaimed only via GC + ContextCleaner — swept by
-    // id for the same reason.
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      graft.operators.Eager
-        .releaseBroadcastsSince(spark, bcBaseline, force = true)
-      val sc = spark.sparkContext
-      org.apache.spark.graft.Storage.shuffleIds(sc)
-        .foreach(id =>
-          org.apache.spark.graft.Storage.removeShuffle(sc, id, blocking = false))
-    }
+    def sweep(): Unit = Session.sweep(spark, bcBaseline)
     // The pivot probe: q_star_join (the round-6 adjudication pivot) timed
     // as min-of-2 at suite start, every 25th query, and suite end. Its
     // trajectory IS the host epoch: a flat pivot with an inflated query

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-15 verdict #7 measurement rig — the end-to-end 10× capstone:
@@ -31,18 +30,7 @@ object CurateCapstone {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_AB_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("graft.stream.shufflePartitions", "8")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(cpus)
 
     // per-stage CPU attribution for the curate query's timed runs —
     // the graft.Bench stage channel, duplicated here because the rig
@@ -68,11 +56,8 @@ object CurateCapstone {
       })
 
     def table(n: String) = graft.sources.Sources.table(spark, sfDir, n)
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+    val bcBaseline = graft.operators.Eager.broadcastSnapshot(spark)
+    def sweep(): Unit = Session.sweep(spark, bcBaseline)
     def median(f: () => Unit): Double = {
       val ts = (1 to runs).map { _ =>
         val t0 = System.nanoTime()

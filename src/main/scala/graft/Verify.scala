@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,47 +6,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("graft.stream.shufflePartitions", "8")
-      // serialized sort writer, matching Bench (round 15: the bypass
-      // writer's R-files-per-map-task storm; results are identical —
-      // a shuffle writer cannot change rows — this just keeps Verify's
-      // execution shape the same as the benched one)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(cpus)
     new java.io.File(outDir).mkdirs()
-    // broadcasts resident at session start are infrastructure; everything
-    // above this baseline belongs to a completed query (sequential loop)
     val bcBaseline = graft.operators.Eager.broadcastSnapshot(spark)
     // between-query storage sweep (also the retry reset — see below)
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      // localCheckpoint blocks (terminal results, CC edge lists) are
-      // invisible to clearCache; between queries nothing is
-      // legitimately persisted, so drop every survivor by handle —
-      // deterministic, unlike waiting for a GC to let the
-      // ContextCleaner run (the round-6 bench-inflation root cause)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // ...and broadcast blocks, the round-7 residual: one per
-      // broadcast join, otherwise reclaimed only via GC+ContextCleaner
-      graft.operators.Eager.releaseBroadcastsSince(spark, bcBaseline, force = true)
-      // ...and shuffle state (round 9): map-output files + driver
-      // ShuffleStatus from completed queries, same GC-latency story
-      val sc = spark.sparkContext
-      org.apache.spark.graft.Storage.shuffleIds(sc)
-        .foreach(id =>
-          org.apache.spark.graft.Storage.removeShuffle(sc, id, blocking = false))
-      System.gc()
-    }
+    def sweep(): Unit = { Session.sweep(spark, bcBaseline); System.gc() }
     SparkEntry.queries.foreach { case (name, fn) =>
       def attempt(): Unit = {
         val df = fn(spark, sfDir)

@@ -99,23 +99,6 @@ class GraphSpec extends AnyFunSuite {
     assert(r2("a") > 0.2 && !r2.values.exists(_.isNaN))
   }
 
-  test("salted PPR hub combine is bit-identical to the unsalted round") {
-    // star hub h with many spokes + a side chain — the salted two-stage
-    // combine (decimal sums, exact + associative) must reproduce the
-    // unsalted aggregate BIT-for-bit at every salt count
-    val e0 = ((1 to 40).map(i => (s"n$i", "h")) ++
-      Seq(("h", "t"), ("t", "u"))).toDF("src", "dst")
-    val edges = e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-    val seeds = Seq("n1", "t").toDF("node")
-    val plain = Graph.personalizedPageRank(edges, seeds, iters = 4,
-      damping = 0.85).as[(String, Double)].collect().toMap
-    for (nSalts <- Seq(2, 8, 32)) {
-      val salted = Graph.personalizedPageRankSalted(edges, seeds, iters = 4,
-        damping = 0.85, nSalts = nSalts).as[(String, Double)].collect().toMap
-      assert(salted === plain, s"nSalts=$nSalts diverged")
-    }
-  }
-
   test("labelPropagation spreads seed labels by majority with min-label ties") {
     // chain a→b→c: b labeled round 1, c round 2; tie at z (one vote
     // each from x=1, y=2) resolves to the smaller label; seeds fixed
@@ -355,5 +338,58 @@ class GraphSpec extends AnyFunSuite {
         damping = 0.95, roundDp = 9)
     }
     assert(ex2.getMessage.contains("grid"))
+  }
+
+  test("personalizedPageRank: no seed in the graph throws in every variant") {
+    // an all-zero teleport would keep every rank at 0 and let the
+    // converged variants "prove" convergence at round 1 (δ = 0)
+    val edges = sym(("a", "b"), ("b", "c"))
+    val ghosts = Seq("ghost", "phantom").toDF("node")
+    val prev = Graph.pageRank(edges, 2, 0.3)
+    val variants = Seq[(String, () => Any)](
+      "fixed" -> (() => Graph.personalizedPageRank(edges, ghosts, 3, 0.85)),
+      "converged" -> (() => Graph.personalizedPageRankConverged(
+        edges, ghosts, 10, 0.3, 6)),
+      "warm start" -> (() => Graph.personalizedPageRankWarmStart(
+        edges, ghosts, prev, 18, 0.3, 6)))
+    for ((name, run) <- variants) {
+      val ex = intercept[IllegalArgumentException](run())
+      assert(ex.getMessage.contains(
+        "personalizedPageRank: no seed is a node of the graph"), name)
+    }
+  }
+
+  test("pageRank and personalizedPageRank: empty edges throw, a single node ranks 1.0") {
+    val empty = Seq.empty[(String, String)].toDF("src", "dst")
+    val loop = Seq(("a", "a")).toDF("src", "dst")
+    val seeds = Seq("a").toDF("node")
+    val callers = Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (e => Graph.pageRank(e, 3, 0.85)),
+      "personalizedPageRank" ->
+        (e => Graph.personalizedPageRank(e, seeds, 3, 0.85)))
+    for ((caller, rank) <- callers) {
+      val ex = intercept[IllegalArgumentException](rank(empty))
+      assert(ex.getMessage ===
+        s"requirement failed: $caller: edges frame is empty (no nodes)")
+      val r = rank(loop).as[(String, Double)].collect().toMap
+      assert(r.keySet === Set("a") && math.abs(r("a") - 1.0) < 1e-12,
+        s"$caller: $r")
+    }
+  }
+
+  test("personalizedPageRank with every node as a seed matches pageRank") {
+    // the directed-with-danglers fixture: both teleports run through
+    // the one loop, and a uniform seed set IS the uniform teleport
+    val edges = Seq(("a", "b"), ("b", "c"), ("a", "c")).toDF("src", "dst")
+    val pr = Graph.pageRank(edges, iters = 5, damping = 0.85)
+      .as[(String, Double)].collect().toMap
+    val ppr = Graph.personalizedPageRank(edges,
+        Seq("a", "b", "c").toDF("node"), iters = 5, damping = 0.85)
+      .as[(String, Double)].collect().toMap
+    assert(ppr.keySet === pr.keySet)
+    pr.foreach { case (n, r) =>
+      assert(math.abs(ppr(n) - r) < 1e-9, s"$n: ppr=${ppr(n)} pr=$r")
+    }
   }
 }
